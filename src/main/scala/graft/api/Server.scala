@@ -75,6 +75,11 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
 
   private def safeName(s: String): Boolean = Server.SafeName.matches(s)
 
+  // TCP_NODELAY on every connection: the JDK server writes the headers
+  // and a small body as two segments, and without it a sequential
+  // keep-alive client waits out a ~40 ms delayed ACK on each response.
+  // The JDK reads the property once, when the first server is created.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress(config.port), 0)
   // handler threads are NON-daemon (a live server must survive the main
   // thread going quiet) — so stop() must shut the pool down, or any
@@ -129,8 +134,9 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
   private def respond(ex: HttpExchange, code: Int, body: String,
                       contentType: String = "text/plain"): Unit = {
     val b = body.getBytes(StandardCharsets.UTF_8)
-    ex.setAttribute("graft.status", code)
-    ex.setAttribute("graft.bytes", b.length.toLong)
+    val l = labelsOf(ex)
+    l.status = code
+    l.bytes = b.length.toLong
     ex.getResponseHeaders.set("Content-Type", contentType)
     ex.sendResponseHeaders(code, if (b.isEmpty) -1 else b.length)
     if (b.nonEmpty) ex.getResponseBody.write(b)
@@ -161,13 +167,27 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
     h.set("Access-Control-Max-Age", "300")
   }
 
+  /** The `/metrics` labels of one request, written while it is served
+    * and observed when it ends. They cannot live in `HttpExchange`
+    * attributes: on JDK 17 those are one map that every exchange of the
+    * context shares, so concurrent requests would read each other's. */
+  private final class Labels {
+    var route = "<other>"
+    var status = 0
+    var bytes = 0L
+  }
+  private val inFlight = new java.util.concurrent.ConcurrentHashMap[HttpExchange, Labels]()
+  private def labelsOf(ex: HttpExchange): Labels = inFlight.get(ex)
+
   private def route(ex: HttpExchange): Unit = {
     val t0 = System.nanoTime()
+    val labels = new Labels
+    inFlight.put(ex, labels)
     try {
       cors(ex)
       if (ex.getRequestMethod == "OPTIONS") {
         // preflight: the CORS headers above ARE the answer
-        ex.setAttribute("graft.route", "<preflight>")
+        labels.route = "<preflight>"
         respond(ex, 204, "")
         return
       }
@@ -176,42 +196,41 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
       val p = params(ex)
       (ex.getRequestMethod, segs) match {
         case ("GET", List("healthcheck")) =>
-          ex.setAttribute("graft.route", "/healthcheck")
+          labels.route = "/healthcheck"
           if (new File(config.healthFailFile).exists())
             respond(ex, 503, "Status set to unhealthy")
           else respond(ex, 200, "ok")
         case ("GET", List("metrics")) =>
-          ex.setAttribute("graft.route", "/metrics")
+          labels.route = "/metrics"
           respond(ex, 200, metrics.render, "text/plain; version=0.0.4")
         case (_, "api" :: rest) =>
           withAuth(ex, p)(who => apiRoute(ex, p, who, rest))
         case ("GET", List("share", uuid, data)) if data.startsWith("data.") =>
-          ex.setAttribute("graft.route", "/share/{uuid}/data.{format}")
+          labels.route = "/share/{uuid}/data.{format}"
           shareData(ex, uuid, data.stripPrefix("data."))
         case ("GET", List("login")) if dashboard.isDefined =>
-          ex.setAttribute("graft.route", "/login")
+          labels.route = "/login"
           dashboard.get.login(ex)
         case ("GET", List("oauth", "callback")) if dashboard.isDefined =>
-          ex.setAttribute("graft.route", "/oauth/callback")
+          labels.route = "/oauth/callback"
           dashboard.get.callback(ex, p)
         case ("GET", List("logout")) if dashboard.isDefined =>
-          ex.setAttribute("graft.route", "/logout")
+          labels.route = "/logout"
           dashboard.get.logout(ex)
         case ("GET", "dashboard" :: rest) if dashboard.isDefined =>
-          ex.setAttribute("graft.route", "/dashboard")
+          labels.route = "/dashboard"
           dashboard.get.page(ex, rest)
         case ("POST", "dashboard" :: rest) if dashboard.isDefined =>
-          ex.setAttribute("graft.route", "/dashboard")
+          labels.route = "/dashboard"
           dashboard.get.post(ex, rest)
         case _ => respond(ex, 404, "not found")
       }
     } catch {
       case NonFatal(e) => try respond(ex, 500, Option(e.getMessage).getOrElse("error")) catch { case NonFatal(_) => () }
     } finally {
-      val route = Option(ex.getAttribute("graft.route")).map(_.toString).getOrElse("<other>")
-      val status = Option(ex.getAttribute("graft.status")).map(_.toString.toInt).getOrElse(0)
-      val bytes = Option(ex.getAttribute("graft.bytes")).map(_.toString.toLong).getOrElse(0L)
-      metrics.observe(route, ex.getRequestMethod, status, (System.nanoTime() - t0) / 1e9, bytes)
+      inFlight.remove(ex)
+      metrics.observe(labels.route, ex.getRequestMethod, labels.status,
+        (System.nanoTime() - t0) / 1e9, labels.bytes)
     }
   }
 
@@ -224,11 +243,11 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
   private def apiRoute(ex: HttpExchange, p: Map[String, String], who: Principal,
                        rest: List[String]): Unit = {
     // bounded default label: unknown paths must not mint new metric series
-    ex.setAttribute("graft.route", "/api/<other>")
+    labelsOf(ex).route = "/api/<other>"
     val db = who.db
     (ex.getRequestMethod, rest) match {
       case ("POST", List("data", "insert", table)) =>
-        ex.setAttribute("graft.route", "/api/data/insert/{table}")
+        labelsOf(ex).route = "/api/data/insert/{table}"
         if (!safeName(table)) respond(ex, 400, "invalid table name")
         else if (!safeName(db)) respond(ex, 400, "invalid destination id")
         else {
@@ -237,13 +256,13 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
         }
 
       case (m, List("data", "query")) if m == "GET" || m == "POST" =>
-        ex.setAttribute("graft.route", "/api/data/query")
+        labelsOf(ex).route = "/api/data/query"
         val q = if (m == "POST") readBody(ex) else p.getOrElse("query", "")
         if (q.trim.isEmpty) respond(ex, 400, "Query cannot be blank")
         else runQuery(ex, db, q, p.getOrElse("format", ""))
 
       case ("POST", List("data", "query", "share")) =>
-        ex.setAttribute("graft.route", "/api/data/query/share")
+        labelsOf(ex).route = "/api/data/query/share"
         Json.parse(readBody(ex)) match {
           case Some(n) if n.hasNonNull("query") && n.get("query").asText.nonEmpty =>
             val duration = if (n.has("duration")) n.get("duration").asLong else 60L
@@ -258,7 +277,7 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
         // passthrough exposes its destination's full surface
         // (data.go:29-56); table-shaped operators have no SQL spelling,
         // so they get named endpoints planning the SAME Scala operators
-        ex.setAttribute("graft.route", "/api/data/analytics/{op}")
+        labelsOf(ex).route = "/api/data/analytics/{op}"
         Json.parse(readBody(ex)) match {
           case Some(n) if n.isObject =>
             val session = executor.tenantSession(db)
@@ -337,14 +356,14 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
       // the stores side gets the same lifecycle — without it a tenant
       // can mint unbounded disk under stores.d with no way to reclaim.
       case ("GET", List("stores")) =>
-        ex.setAttribute("graft.route", "/api/stores")
+        labelsOf(ex).route = "/api/stores"
         val items = catalog.listStores(db).map { case (n, k, b) =>
           s"""{"name":"${Json.escape(n)}","kind":"${Json.escape(k)}","bytes":$b}"""
         }
         respond(ex, 200, items.mkString("[", ",", "]"), "application/json")
 
       case ("DELETE", List("stores", name)) =>
-        ex.setAttribute("graft.route", "/api/stores/{store}")
+        labelsOf(ex).route = "/api/stores/{store}"
         if (!safeName(name)) respond(ex, 400, "invalid store name")
         else {
           // hold the per-store build lock across the drop: a concurrent
@@ -370,16 +389,16 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
         }
 
       case ("GET", List("analytics")) =>
-        ex.setAttribute("graft.route", "/api/analytics")
+        labelsOf(ex).route = "/api/analytics"
         respond(ex, 200, Analytics.listJson, "application/json")
 
       case ("GET", List("tables")) =>
-        ex.setAttribute("graft.route", "/api/tables")
+        labelsOf(ex).route = "/api/tables"
         val names = catalog.listTables(db).map(t => "\"" + Json.escape(t) + "\"")
         respond(ex, 200, names.mkString("[", ",", "]"), "application/json")
 
       case ("GET", List("tables", table, "columns")) =>
-        ex.setAttribute("graft.route", "/api/tables/{table}/columns")
+        labelsOf(ex).route = "/api/tables/{table}/columns"
         val cols = catalog.listColumns(db, table).map { case (n, t) =>
           s"""{"name":"${Json.escape(n)}","type":"${Json.escape(t)}"}"""
         }
@@ -390,14 +409,14 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
       // the tables/columns introspection; the reference leaves function
       // discovery to the destination's docs).
       case ("GET", List("functions")) =>
-        ex.setAttribute("graft.route", "/api/functions")
+        labelsOf(ex).route = "/api/functions"
         val fns = graft.functions.GraftFunctions.descriptions.map { case (n, usage) =>
           s"""{"name":"${Json.escape(n)}","usage":"${Json.escape(usage)}"}"""
         }
         respond(ex, 200, fns.mkString("[", ",", "]"), "application/json")
 
       case ("GET", List("destinations")) =>
-        ex.setAttribute("graft.route", "/api/destinations")
+        labelsOf(ex).route = "/api/destinations"
         val static = config.apiKeys.values.toSeq.distinct.map(id =>
           s"""{"id":$id,"type":"spark","name":"static"}""")
         val dynamic = meta.listDestinations.map(d =>
@@ -407,7 +426,7 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
       // Create a destination (destinations.go:37-68; settings accepted
       // but ignored — every destination is served by the same engine).
       case ("POST", List("destinations")) =>
-        ex.setAttribute("graft.route", "/api/destinations")
+        labelsOf(ex).route = "/api/destinations"
         Json.parse(readBody(ex)) match {
           case Some(n) =>
             val dtype = if (n.hasNonNull("type")) n.get("type").asText else "spark"
@@ -422,7 +441,7 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
       // Mint an API key (destinations.go:14-21): for your own
       // destination, or any destination with the admin key.
       case ("POST", List("destinations", id, "keys")) =>
-        ex.setAttribute("graft.route", "/api/destinations/{id}/keys")
+        labelsOf(ex).route = "/api/destinations/{id}/keys"
         if (!safeName(id)) respond(ex, 400, "invalid destination id")
         else if (!who.admin && id != db) respond(ex, 403, "Forbidden")
         else if (!who.admin && !meta.destinationExists(id) && !config.apiKeys.values.exists(_ == id))
@@ -494,9 +513,9 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
     // interruptOnCancel: running tasks are interrupted, not just queued
     // ones — a cancelled group frees its task slots immediately
     sc.setJobGroup(group, s"http request ($group)", interruptOnCancel = true)
-    // AndFutureJobs: the encoder streams via toLocalIterator — one Spark
-    // job per partition batch — so a one-shot cancel landing in the
-    // driver-side gap between jobs would let the next batch run; the
+    // AndFutureJobs: the encoder runs a sequence of Spark jobs — query
+    // stages, then one job per result wave — so a one-shot cancel landing
+    // in the driver-side gap between jobs would let the next one run; the
     // tombstone makes later submissions in this group fail immediately
     // (per-request UUID group, so it can never hit another request)
     val timer =
@@ -508,10 +527,11 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
     try {
       val isCsv = format.equalsIgnoreCase("csv")
       ex.getResponseHeaders.set("Content-Type", if (isCsv) "text/csv" else "application/json")
-      ex.setAttribute("graft.status", 200)
+      val labels = labelsOf(ex)
+      labels.status = 200
       ex.sendResponseHeaders(200, 0) // chunked
       val counting: OutputStream = new CountingOutputStream(ex.getResponseBody,
-        n => ex.setAttribute("graft.bytes", n))
+        n => labels.bytes = n)
       val capped: OutputStream =
         if (config.maxResultBytes > 0) new CappedOutputStream(counting, config.maxResultBytes)
         else counting
@@ -615,7 +635,7 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
     var hb: Option[Thread] = None
     try {
       ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.setAttribute("graft.status", 200)
+      labelsOf(ex).status = 200
       ex.sendResponseHeaders(200, 0) // chunked
       val out = ex.getResponseBody
       val hbThread = new Thread(() => {
@@ -671,8 +691,9 @@ final class Server(config: ServerConfig, catalog: TableCatalog,
           case Some(body) =>
             val isCsv = format.equalsIgnoreCase("csv")
             ex.getResponseHeaders.set("Content-Type", if (isCsv) "text/csv" else "application/json")
-            ex.setAttribute("graft.status", 200)
-            ex.setAttribute("graft.bytes", body.length.toLong)
+            val labels = labelsOf(ex)
+            labels.status = 200
+            labels.bytes = body.length.toLong
             ex.sendResponseHeaders(200, body.length)
             ex.getResponseBody.write(body)
             ex.close()

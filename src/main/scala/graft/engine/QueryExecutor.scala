@@ -56,7 +56,7 @@ final class QueryExecutor(spark: SparkSession, catalog: TableCatalog) {
   /** Tenant session with views registered at the current catalog
     * version, plus the set of table names visible to the tenant. Tags
     * the calling thread with the tenant's FAIR scheduler pool: every
-    * job this thread submits (including the lazy toLocalIterator jobs
+    * job this thread submits (including the encoder's result-wave jobs
     * while the response streams) lands in the tenant's pool, so one
     * tenant's heavy query cannot monopolize the shared context — pools
     * split task slots fairly while both are hungry. Needs

@@ -812,6 +812,38 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.contains("graft_api_response_size_bytes_total"))
   }
 
+  /** `graft_api_requests_total` for one label set, 0 when absent. */
+  private def requests(route: String, method: String, status: Int): Long = {
+    val key = s"""graft_api_requests_total{route="$route",method="$method",status="$status"} """
+    get("/metrics").body().linesIterator.find(_.startsWith(key))
+      .map(_.stripPrefix(key).toLong).getOrElse(0L)
+  }
+
+  test("metrics labels: a 404 after a query counts under <other>, not the query's route") {
+    val other404 = requests("<other>", "GET", 404)
+    val query404 = requests("/api/data/query", "GET", 404)
+    val q = get("/api/data/query?api_key=key1&query=" + java.net.URLEncoder.encode("select 1 as one", "UTF-8"))
+    assert(q.statusCode() == 200)
+    assert(get("/nope").statusCode() == 404)
+    assert(requests("<other>", "GET", 404) == other404 + 1)
+    assert(requests("/api/data/query", "GET", 404) == query404)
+  }
+
+  test("metrics labels: concurrent requests on two routes are counted exactly per route") {
+    val health0 = requests("/healthcheck", "GET", 200)
+    val tables0 = requests("/api/tables", "GET", 200)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val sent = (1 to 40).map { i =>
+        val path = if (i % 2 == 0) "/healthcheck" else "/api/tables?api_key=key1"
+        pool.submit(new java.util.concurrent.Callable[Int] { def call(): Int = get(path).statusCode() })
+      }
+      assert(sent.forall(_.get(60, java.util.concurrent.TimeUnit.SECONDS) == 200))
+    } finally pool.shutdown()
+    assert(requests("/healthcheck", "GET", 200) == health0 + 20)
+    assert(requests("/api/tables", "GET", 200) == tables0 + 20)
+  }
+
   test("CORS is wildcard and NON-credentialed; preflight answers 204 (router.go:74-81 effective behavior)") {
     val pre = client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$port/api/tables"))
       .method("OPTIONS", HttpRequest.BodyPublishers.noBody())
